@@ -2,7 +2,8 @@
 
     python3 kgbench/record.py [WORKLOAD ...]
 
-Runs one pass of each workload for each of the ``N_VARIANTS`` sentence
+Runs one pass of each workload (and of the staged ``kg_job.main`` job
+of ``crawl_dup``'s traced run) for each of the ``N_VARIANTS`` sentence
 draws (seeds 0 .. N_VARIANTS-1) and stores the digest of its triples,
 entities and edges.  Re-record only when a change to the library is meant
 to change its outputs, and say so in that change.
@@ -32,7 +33,7 @@ def main(names) -> int:
     spark = R.start_spark(cores, {})
     try:
         for name in names:
-            spec = jobs.SPECS[name]
+            spec = jobs.RECORDED[name]
             for variant in range(W.N_VARIANTS):
                 wl = jobs.Workload(spark, spec, variant, os.path.join(run_dir, "work"), cores)
                 input_dir, corpus = wl.input_for(1)
@@ -57,4 +58,4 @@ def main(names) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1:] or sorted(jobs.SPECS)))
+    sys.exit(main(sys.argv[1:] or sorted(jobs.RECORDED)))

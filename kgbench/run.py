@@ -38,7 +38,7 @@ from spans import clear_job_group  # noqa: E402
 
 T_PROCESS = host.process_start_monotonic()
 WARM_PASSES = 2  # one in traced and single-core runs, which must end within 180 s
-MIN_PASSES = 2
+MIN_PASSES = 3
 MIN_TRACED_PASSES = 2  # of each kind in a traced run
 MAX_PASSES = 40
 

@@ -154,10 +154,13 @@ def measure(run, spark, wl, expected, session_start_s: float):
         staged = jobs.Workload(spark, jobs.STAGED, run.args.seed, wl.work_dir, run.cores)
         input_dir, _ = staged.input_for("warm")
         staged.run_pass(input_dir, "warm")[1].close()  # untimed warm pass
+        staged_expected = jobs.recorded_digest(jobs.STAGED.name, run.args.seed)
+        if staged_expected is None:
+            run.problems.append(f"no digest recorded for {jobs.STAGED.name} seed {run.args.seed}")
         for i in range(STAGED_PASSES):
-            run.do_pass(staged, STAGED_FIRST_PASS + i, expected, tracer, keep)
+            run.do_pass(staged, STAGED_FIRST_PASS + i, staged_expected, tracer, keep)
     else:
-        notes["lineage.*"] = "measured in crawl_dup's traced run (kg_job.main on its input)"
+        notes["lineage.*"] = "measured in crawl_dup's traced run (kg_job.main over the staged_job input)"
     t0 = time.monotonic()
     kernel, single = single_core_runs(run, wl, scaling=wl.spec.name == "unique_text")
     print(f"[kgbench] single-core processes: {time.monotonic() - t0:.1f}s", file=sys.stderr)
